@@ -79,16 +79,15 @@ FLOOR_NOTE = (
 
 
 def timed_median(fn, runs: int = RUNS) -> tuple[float, list[float]]:
-    """(median, [min, max]) wall time of ``runs`` invocations (seconds)."""
+    """(median, [min, max]) wall time of ``runs`` invocations (seconds);
+    one invocation reports its single time as ``[t]``, not a spread."""
     samples = []
     for _ in range(runs):
         t0 = time.perf_counter()
         fn()
         samples.append(time.perf_counter() - t0)
-    return round(statistics.median(samples), 4), [
-        round(min(samples), 4),
-        round(max(samples), 4),
-    ]
+    spread = [min(samples), max(samples)] if runs > 1 else samples
+    return round(statistics.median(samples), 4), [round(t, 4) for t in spread]
 
 
 def _production_fns(spark, sf_dir: str):
@@ -332,7 +331,7 @@ def bench_spark_extras(spark, registry, sf_dir: str):
     PQ.build_ivfpq_index(spark, ivfpq_path, id_col="vec_id")
     build_s = round(time.perf_counter() - t0, 4)
     extras["sim_ivfpq_build_index"] = build_s
-    extras_spread["sim_ivfpq_build_index"] = [build_s, build_s]
+    extras_spread["sim_ivfpq_build_index"] = [build_s]
     print(
         f"# sim_ivfpq_build_index: {build_s:.3f}s (extra, 1 timed)",
         file=sys.stderr,

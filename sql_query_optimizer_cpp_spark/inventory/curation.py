@@ -142,10 +142,12 @@ def curation_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.text import content_fingerprint, token_count
 
-    # NOT _spread here (r14 A/B: 1.49 s no-spread vs 2.25 s spread at
-    # sf0.1) — the quality expressions are cheap relative to shuffling
-    # the text payload an extra time; the dedup window redistributes
-    # right after anyway.
+    # quality_filter spreads a single-split scan over the cores itself.
+    # r14 measured a spread here as a loss (1.49 s without, 2.25 s with at
+    # sf0.1) while the filter split each text about ten times.  Splitting
+    # once per document and spreading measured 1.47-2.07 s against
+    # 1.84-2.18 s for the r15 form (warm medians of three interleaved
+    # sessions each, sf0.1, 4 cores).
     #
     # r15 (guide §2.3, VERDICT r14 #7): the only downstream consumers of
     # ``text`` are the content fingerprint (the dedup window key) and the

@@ -475,12 +475,10 @@ WHERE c3.n3 >= {_LM_MIN_COUNT}""",
     tags=("text",),
 )
 def text_ngram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import shingle_expr
+    from ..operators.dedup import doc_shingles
 
     t = load_tables(spark, sf_dir, ("documents",))
-    tri = t["documents"].select(
-        F.explode(F.expr(shingle_expr("text", 3))).alias("s")
-    )
+    tri = doc_shingles(t["documents"], n=3, distinct=False).select("s")
     split = tri.select(
         F.regexp_extract("s", r"^(.*) ([^ ]+)$", 1).alias("ctx"),
         F.regexp_extract("s", r"^(.*) ([^ ]+)$", 2).alias("w"),

@@ -32,6 +32,13 @@ from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from ..functions import hash64, hash64_sql
+from .dedup import (
+    _persist_tracked,
+    _runs_adaptive,
+    _spread,
+    doc_shingles,
+    shingles_sql,
+)
 from .text import (
     lang_id,
     lang_id_sql,
@@ -39,6 +46,7 @@ from .text import (
     quality_score_sql,
     token_count,
     token_count_sql,
+    tokens,
 )
 
 SAMPLE_MOD = 10_000
@@ -265,9 +273,16 @@ def quality_filter(
     pipeline stage filters in place instead of joining back on the id
     (which would re-scan the corpus and re-evaluate these expressions).
     """
-    n = token_count(text_col)
-    q = quality_score(text_col)
-    lid = lang_id(text_col)
+    # A single-split scan is spread over the cores first; an input that
+    # already went through a shuffle is left as it is.  Each text is then
+    # split once, into a tokens column every feature reads (CollapseProject
+    # keeps that Project: it does not inline an expensive expression its
+    # consumer references many times).
+    src = df if _runs_adaptive(df) else _spread(df)
+    src = src.withColumn("__toks", tokens(text_col))
+    n = token_count(toks="__toks")
+    q = quality_score(toks="__toks")
+    lid = lang_id(toks="__toks")
     # NULL text first: every later condition evaluates to NULL on it and
     # CASE would fall through to 'ok' — a corrupt document sailing
     # through the quality gate (review finding; the SQL twin mirrors it)
@@ -279,10 +294,12 @@ def quality_filter(
         .otherwise(F.lit("ok"))
     )
     if passthrough:
-        return df.withColumn("reason", reason).withColumn(
-            "keep", F.col("reason") == "ok"
+        return (
+            src.withColumn("reason", reason)
+            .withColumn("keep", F.col("reason") == "ok")
+            .drop("__toks")
         )
-    return df.select(
+    return src.select(
         F.col(id_col),
         reason.alias("reason"),
     ).withColumn("keep", F.col("reason") == "ok")
@@ -332,8 +349,6 @@ def decontaminate(
 
     Output: (doc_id, n_shared_shingles, n_probe_docs).
     """
-    from .dedup import _persist_tracked, doc_shingles
-
     # both join sides derive from the same explode + distinct — persist
     # it once or Catalyst recomputes the corpus-wide shuffle per consumer
     # (the same fix the dedup pipelines already carry)
@@ -362,8 +377,6 @@ def decontaminate_sql(
     n: int = 3,
 ) -> str:
     """DuckDB twin of :func:`decontaminate`."""
-    from .dedup import shingles_sql
-
     return f"""
 WITH ex AS (SELECT DISTINCT {id_expr}, s FROM
   (SELECT {id_expr}, unnest({shingles_sql(text_expr, n)}) AS s FROM {table})),

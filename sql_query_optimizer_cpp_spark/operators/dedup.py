@@ -23,33 +23,39 @@ replicate results bit-for-bit.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window as W
+from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from ..functions import hash64, hash64_sql, minhash_params, minhash_transform
 from .cache import persist_tracked as _persist_tracked, release_cached  # noqa: F401
-from .text import content_fingerprint, tokens
+from .text import content_fingerprint, tokens, tokens_sql
 
 # Shingle frames from the pair pipelines are persisted via the shared
 # tracked-cache helper (operators/cache.py): MEMORY_AND_DISK, LRU-evictable,
 # reclaimed by release_cached() (re-exported here for compatibility).
 
 
-def shingle_expr(col: str = "text", n: int = 3) -> str:
-    """Spark SQL expression for word n-gram shingles (lambda-safe form)."""
-    t = f"split(trim({col}), ' +')"
-    joined = " || ' ' || ".join(f"element_at({t}, i + {k})" for k in range(n))
-    return (
-        f"CASE WHEN size({t}) >= {n} THEN "
-        f"transform(sequence(1, size({t}) - {n - 1}), i -> {joined}) "
+def shingle_array(toks: str, n: int = 3) -> Column:
+    """Word n-gram shingles (array<string>) of the token-array column
+    ``toks`` (a projected :func:`..text.tokens`).
+
+    The lambda reads the projected array instead of splitting the text
+    itself: Catalyst does not hoist a deterministic subtree out of a
+    lambda, so ``element_at(split(trim(text), ' +'), i)`` would re-split
+    the whole document for every token of every shingle."""
+    joined = " || ' ' || ".join(f"element_at({toks}, i + {k})" for k in range(n))
+    return F.expr(
+        f"CASE WHEN size({toks}) >= {n} THEN "
+        f"transform(sequence(1, size({toks}) - {n - 1}), i -> {joined}) "
         f"ELSE CAST(array() AS ARRAY<STRING>) END"
     )
 
 
 def shingles_sql(expr: str = "text", n: int = 3) -> str:
-    """DuckDB twin of :func:`shingles` (1-based list indexing, empty
-    generate_series when the text is shorter than n tokens)."""
-    t = f"regexp_split_to_array(trim({expr}), ' +')"
+    """DuckDB twin of :func:`shingle_array` over the tokens of the text
+    ``expr`` (1-based list indexing, empty generate_series when the text
+    is shorter than n tokens)."""
+    t = tokens_sql(expr)
     joined = " || ' ' || ".join(f"{t}[i + {k}]" for k in range(n))
     return f"list_transform(generate_series(1, len({t}) - {n - 1}), i -> {joined})"
 
@@ -70,6 +76,15 @@ def _spread(df: DataFrame) -> DataFrame:
     return df.repartition(parallelism)
 
 
+def _runs_adaptive(df: DataFrame) -> bool:
+    """Whether Spark plans ``df`` adaptively, i.e. its plan has a shuffle.
+    Counting such a frame's partitions the way :func:`_spread` does
+    (``df.rdd``) runs its shuffle stages once just to count, and the
+    query that consumes the frame runs them again."""
+    plan = df._jdf.queryExecution().executedPlan()
+    return plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec"
+
+
 def doc_shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
                  n: int = 3, distinct: bool = True) -> DataFrame:
     """(doc_id, shingle) pairs — the set representation when ``distinct``
@@ -81,8 +96,10 @@ def doc_shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     duplicate-aware verify (:func:`_verify_jaccard` counts DISTINCT
     matches).  Keep the default for consumers whose counts are
     set-semantics (PPJoin prefix ranks, probe-overlap joins)."""
-    ex = _spread(df).select(
-        F.col(id_col), F.explode(F.expr(shingle_expr(text_col, n))).alias("s")
+    ex = (
+        _spread(df)
+        .select(F.col(id_col), tokens(text_col).alias("_toks"))
+        .select(F.col(id_col), F.explode(shingle_array("_toks", n)).alias("s"))
     )
     return ex.distinct() if distinct else ex
 
@@ -299,61 +316,46 @@ def _verify_overlap(
     the whole candidate-scoped machinery (a review pass found the two
     pipelines carrying verbatim copies that could silently diverge).
 
-    Set semantics regardless of the shingle frame's duplication:
-    intersections count DISTINCT shared shingles and sizes are DISTINCT
-    counts, so a multiset ``shingles`` input (the cheap path — see
+    Set at a time: each candidate document's DISTINCT shingles are
+    aggregated once into an array (``collect_set``), and a pair is scored
+    from ``size(array_intersect(a, b))`` and the two set sizes — one
+    aggregation and two joins on the candidate pairs, with no per-shingle
+    pair join.  Set semantics regardless of the shingle frame's
+    duplication, so a multiset ``shingles`` input (the cheap path — see
     :func:`doc_shingles`) verifies identically to a pre-distinct one."""
     ex = shingles if shingles is not None else doc_shingles(df, id_col, text_col, n)
-    # Candidate-scoped verification (r15, guide §2.3/§8 — decide with
-    # small rows): every aggregation below inner-joins back to ``cand``,
-    # so only the shingles of docs appearing in SOME candidate pair ever
-    # matter.  Semi-join the corpus-scale shingle frame down to that doc
-    # set before any shuffle: the per-doc size aggregation — previously
-    # a CORPUS-WIDE two-level countDistinct shuffle, computed twice (sa
-    # and sb are separate subtrees Catalyst does not dedupe) — and both
-    # intersection join sides become candidate-scoped.  ``cand`` is
-    # persisted (tracked, released by release_cached like the shingle
-    # cache) because it now feeds four consumers — recomputing the
-    # banded-LSH/blocking self-join per consumer would cost more than
-    # the scoping saves.  Results identical by construction.
+    # Candidate-scoped (r15): only the shingles of docs in SOME candidate
+    # pair matter, so the corpus-scale shingle frame is semi-joined down
+    # to that doc set before it is shuffled into sets.  ``cand`` feeds
+    # both sides of the doc set and the scoring joins, so it is persisted
+    # (tracked, released by release_cached like the shingle cache) and
+    # materialized HERE: the planner then sees its real size instead of
+    # an unknown cache.  Candidates under Spark's broadcast threshold make
+    # the semi-join and both scoring joins broadcast joins, so the shingle
+    # frame is filtered map-side before its one shuffle; a corpus-scale
+    # candidate set keeps the shuffle joins.
     cand = _persist_tracked(cand)
+    cand.count()
     docs = (
         cand.select(F.col("doc_a").alias(id_col))
         .union(cand.select(F.col("doc_b").alias(id_col)))
         .distinct()
     )
-    exc = _persist_tracked(ex.join(docs, id_col, "left_semi"))
-    # per-SIDE dedup happens inside the candidate-scoped aggregation (the
-    # countDistinct below), NOT as a corpus-wide distinct() here — that
-    # corpus shuffle is exactly what the multiset path exists to avoid;
-    # join fan-out from duplicated shingles is bounded by per-doc
-    # duplication and only on candidate pairs
-    ea = exc.select(F.col(id_col).alias("doc_a"), F.col("s"))
-    eb = exc.select(F.col(id_col).alias("_doc_b"), F.col("s").alias("s_b"))
-    inter = (
-        cand.join(ea, "doc_a")
-        .join(
-            eb,
-            (F.col("doc_b") == F.col("_doc_b")) & (F.col("s") == F.col("s_b")),
-            "inner",
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.countDistinct("s").cast("long").alias("inter"))
+    sets = (
+        ex.join(docs, id_col, "left_semi")
+        .groupBy(id_col)
+        .agg(F.collect_set("s").alias("_set"))
     )
-    sizes = exc.groupBy(id_col).agg(
-        F.countDistinct("s").cast("long").alias("sz")
-    )
-    sa = sizes.withColumnRenamed(id_col, "doc_a").withColumnRenamed("sz", "sz_a")
-    sb = sizes.withColumnRenamed(id_col, "doc_b").withColumnRenamed("sz", "sz_b")
+    sa = sets.select(F.col(id_col).alias("doc_a"), F.col("_set").alias("_sa"))
+    sb = sets.select(F.col(id_col).alias("doc_b"), F.col("_set").alias("_sb"))
+    inter = F.size(F.array_intersect("_sa", "_sb")).cast("long")
+    sz_a = F.size("_sa").cast("long")
+    sz_b = F.size("_sb").cast("long")
     return (
-        inter.join(sa, "doc_a")
+        cand.join(sa, "doc_a")
         .join(sb, "doc_b")
-        .withColumn(
-            score_name,
-            score_of(F.col("inter"), F.col("sz_a"), F.col("sz_b")),
-        )
+        .select("doc_a", "doc_b", score_of(inter, sz_a, sz_b).alias(score_name))
         .filter(F.col(score_name) >= threshold)
-        .select("doc_a", "doc_b", score_name)
     )
 
 

@@ -225,7 +225,7 @@ def train_pq(
     order and break bit-exact determinism.  Without identity columns,
     training assumes unique ids (assignment never does — see
     ``_rowkey`` in the index builders)."""
-    from .similarity import training_sample
+    from .similarity import _check_sample, training_sample
 
     spark = df.sparkSession
     dsub = dim // n_subs
@@ -233,8 +233,10 @@ def train_pq(
     # rationale as kmeans_centroids: don't re-derive it from the corpus
     # iters+1 times).  ``sample`` (r15): a caller-owned pre-persisted
     # training_sample frame — build_ivfpq_index shares one cache between
-    # its two trainers (same sample predicate by construction).
+    # its two trainers; one drawn with another sample_mod is rejected.
     caller_owned = sample is not None
+    if caller_owned:
+        _check_sample(sample, sample_mod)
     sdf = (
         sample
         if caller_owned

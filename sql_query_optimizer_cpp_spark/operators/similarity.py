@@ -750,7 +750,24 @@ def training_sample(
             .select(id_col, emb_col)
         )
     # _spread parallelizes the per-row assignment arithmetic locally
-    return _spread(sdf)
+    out = _spread(sdf)
+    # carried on the frame (persist() returns the same object) so a
+    # trainer handed this frame as ``sample=`` can check its predicate
+    out.sample_mod = sample_mod
+    return out
+
+
+def _check_sample(sample: DataFrame, sample_mod: int) -> None:
+    """Reject a caller-owned ``sample=`` that is not a
+    :func:`training_sample` frame drawn with the trainer's own
+    ``sample_mod`` — it would otherwise train on the wrong rows without
+    an error."""
+    got = getattr(sample, "sample_mod", None)
+    if got != sample_mod:
+        raise ValueError(
+            f"sample= must be training_sample(..., sample_mod={sample_mod}); "
+            f"got a frame drawn with sample_mod={got}"
+        )
 
 
 def kmeans_centroids(
@@ -793,14 +810,17 @@ def kmeans_centroids(
 
     ``sample`` (r15): a caller-owned pre-derived training sample — the
     :func:`training_sample` frame, already persisted by the caller, who
-    keeps lifecycle responsibility.  Lets :func:`..pq.build_ivfpq_index`
-    share ONE cached sample between its two trainers instead of
-    materializing the identical frame twice."""
+    keeps lifecycle responsibility; one drawn with another ``sample_mod``
+    raises ValueError.  Lets :func:`..pq.build_ivfpq_index` share ONE
+    cached sample between its two trainers instead of materializing the
+    identical frame twice."""
     spark = df.sparkSession
     # the sample feeds the seed collect plus one scan per iteration; at
     # 100 TB re-deriving it from the corpus each pass would multiply the
     # training read by iters+1 (guide §5: reuse justifies the cache)
     caller_owned = sample is not None
+    if caller_owned:
+        _check_sample(sample, sample_mod)
     sdf = (
         sample
         if caller_owned

@@ -45,8 +45,21 @@ def tokens_sql(expr: str = "text") -> str:
     return f"regexp_split_to_array(trim({expr}), ' +')"
 
 
-def token_count(col: str = "text") -> Column:
-    return F.size(tokens(col)).cast("long")
+def _toks(col: str, toks: str | None) -> str:
+    """Spark SQL text of a document's token array.
+
+    The helpers that :func:`..curation.quality_filter` combines take an
+    optional ``toks``: the name of a column already holding
+    ``tokens(col)``.  A caller that needs several features of one
+    document projects that column once and passes it to each, so the
+    text is split once per document, not once per feature (Catalyst does
+    not share a ``split`` repeated across CASE branches or hoist it out of
+    a lambda)."""
+    return toks if toks is not None else f"split(trim({col}), ' +')"
+
+
+def token_count(col: str = "text", toks: str | None = None) -> Column:
+    return F.expr(f"size({_toks(col, toks)})").cast("long")
 
 
 def token_count_sql(expr: str = "text") -> str:
@@ -57,9 +70,13 @@ def _in_list(items: tuple[str, ...]) -> str:
     return ", ".join(f"'{w}'" for w in items)
 
 
-def stopword_count(col: str = "text", words: tuple[str, ...] = QUALITY_STOPWORDS) -> Column:
+def stopword_count(
+    col: str = "text",
+    words: tuple[str, ...] = QUALITY_STOPWORDS,
+    toks: str | None = None,
+) -> Column:
     return F.expr(
-        f"size(filter(split(trim({col}), ' +'), t -> t IN ({_in_list(words)})))"
+        f"size(filter({_toks(col, toks)}, t -> t IN ({_in_list(words)})))"
     ).cast("long")
 
 
@@ -70,12 +87,10 @@ def stopword_count_sql(expr: str = "text", words: tuple[str, ...] = QUALITY_STOP
     )
 
 
-def avg_token_len(col: str = "text") -> Column:
+def avg_token_len(col: str = "text", toks: str | None = None) -> Column:
     """Mean token length = len(all chars in tokens) / n_tokens (double)."""
-    toks = f"split(trim({col}), ' +')"
-    return F.expr(
-        f"CAST(length(concat_ws('', {toks})) AS DOUBLE) / size({toks})"
-    )
+    t = _toks(col, toks)
+    return F.expr(f"CAST(length(concat_ws('', {t})) AS DOUBLE) / size({t})")
 
 
 def avg_token_len_sql(expr: str = "text") -> str:
@@ -86,16 +101,16 @@ def avg_token_len_sql(expr: str = "text") -> str:
     )
 
 
-def quality_score(col: str = "text") -> Column:
+def quality_score(col: str = "text", toks: str | None = None) -> Column:
     """Composite prose-quality heuristic in [0, ~1.5]:
 
     0.5 * stopword_ratio + 0.5 * min(n_tokens/100, 1) + 0.5 * (avg token
     length between 3 and 8).  Deterministic double arithmetic only.
     """
-    n = token_count(col).cast("double")
-    sw = stopword_count(col).cast("double") / n
+    n = token_count(col, toks).cast("double")
+    sw = stopword_count(col, toks=toks).cast("double") / n
     length_term = F.least(n / F.lit(100.0), F.lit(1.0))
-    atl = avg_token_len(col)
+    atl = avg_token_len(col, toks)
     shape_term = F.when((atl >= 3.0) & (atl <= 8.0), F.lit(0.5)).otherwise(F.lit(0.0))
     return sw * 0.5 + length_term * 0.5 + shape_term
 
@@ -109,18 +124,20 @@ def quality_score_sql(expr: str = "text") -> str:
     return f"({sw} * 0.5 + {length_term} * 0.5 + {shape})"
 
 
-def lang_scores(col: str = "text") -> dict[str, Column]:
+def lang_scores(col: str = "text", toks: str | None = None) -> dict[str, Column]:
     """Per-language stopword hit counts (the textcat-style evidence)."""
-    return {lang: stopword_count(col, words) for lang, words in STOPWORDS.items()}
+    return {
+        lang: stopword_count(col, words, toks) for lang, words in STOPWORDS.items()
+    }
 
 
-def lang_id(col: str = "text") -> Column:
+def lang_id(col: str = "text", toks: str | None = None) -> Column:
     """Deterministic argmax over language stopword scores.
 
     Ties break in fixed priority order en > es > de > fr; all-zero evidence
     labels the document 'und' (undetermined, BCP-47 convention).
     """
-    s = lang_scores(col)
+    s = lang_scores(col, toks)
     return (
         F.when(
             (s["en"] + s["es"] + s["de"] + s["fr"]) == 0, F.lit("und")

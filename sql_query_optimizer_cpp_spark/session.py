@@ -35,6 +35,13 @@ _DEFAULTS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Let AQE coalesce the shuffle partitions of the plans that fill
+    # persisted frames too.  Off (Spark's default), a cached plan keeps
+    # all shuffle.partitions output partitions, so every scan of a small
+    # persisted frame (a dedup shingle set, a candidate-pair frame) runs
+    # that many tasks, mostly empty.  The cost: a consumer can no longer
+    # rely on the cached frame's partitioning and may shuffle it again.
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     "spark.sql.cbo.enabled": "true",
     "spark.sql.cbo.joinReorder.enabled": "true",
     "spark.sql.statistics.histogram.enabled": "true",

@@ -2044,3 +2044,36 @@ def test_fallback_ivfpq_probe_equals_literal(spark, tmp_path):
         )
     )
     assert cross == lit
+
+
+def test_trainers_reject_sample_with_other_sample_mod(spark):
+    """A caller-owned ``sample=`` must be the training_sample drawn with
+    the trainer's own sample_mod; anything else used to train silently
+    on the wrong rows."""
+    import pytest as _pytest
+
+    from sql_query_optimizer_cpp_spark.operators import pq as PQ
+    from sql_query_optimizer_cpp_spark.operators import similarity as S
+
+    emb = load_tables(spark, SF_DIR, ("embeddings",))["embeddings"]
+    other = S.training_sample(emb, PQ.PQ_SAMPLE_MOD + 1)
+    with _pytest.raises(ValueError, match="sample_mod"):
+        PQ.train_pq(emb, sample_mod=PQ.PQ_SAMPLE_MOD, sample=other)
+    with _pytest.raises(ValueError, match="sample_mod"):
+        S.kmeans_centroids(
+            emb, sample_mod=S.IVF_SAMPLE_MOD + 1, sample=S.training_sample(emb)
+        )
+    plain = emb.where(emb["vec_id"] % S.IVF_SAMPLE_MOD == 0).select(
+        "vec_id", "embedding"
+    )
+    with _pytest.raises(ValueError, match="sample_mod"):
+        S.kmeans_centroids(emb, sample=plain)
+    # a matching sample trains exactly like the trainer's own
+    same = S.training_sample(emb, S.IVF_SAMPLE_MOD).persist()
+    try:
+        got = sorted(
+            map(tuple, S.kmeans_centroids(emb, iters=1, sample=same).collect())
+        )
+    finally:
+        same.unpersist()
+    assert got == sorted(map(tuple, S.kmeans_centroids(emb, iters=1).collect()))
